@@ -3,10 +3,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Env.positiveInt("SPARK_GRAFT_CPUS", 4)
+    // Validated before the session starts: a malformed knob fails here.
+    val gcEvery = Env.positiveInt("SPARK_GRAFT_GC_EVERY", 4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet carries INT64 TIMESTAMP(NANOS); see Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -52,7 +54,6 @@ object Bench {
     // the every-query cadence at sf0.1 — see OPTIMIZATION_r18.md).
     // SPARK_GRAFT_GC_EVERY=1 restores the old cadence; the timing
     // methodology (noop sink, per-query job groups) is unchanged.
-    val gcEvery = sys.env.get("SPARK_GRAFT_GC_EVERY").map(_.toInt).getOrElse(4)
     var sinceGc = 0
     val results = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -82,10 +83,11 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       sinceGc += 1
       if (sinceGc >= gcEvery) { System.gc(); sinceGc = 0 }
-      // Read the group's job ids after the cleanup work above: the status
-      // store is fed by the async listener bus, and the cleanup (plus the
-      // periodic GC pause) doubles as its settle time.
-      val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(name).length
+      // The status store is fed by the async listener bus: settle the
+      // group's job count (poll until it stops changing) before reading it,
+      // so a lagging bus cannot undercount and weaken the job gate.
+      val jobs = JobGate.settle(
+        () => spark.sparkContext.statusTracker.getJobIdsForGroup(name).length)
       (name, elapsed, ok, jobs)
     }
     // A crashed query records its NEGATED partial time (visible failure

@@ -42,6 +42,25 @@ object JobGate {
       .map(m => m.group(1) -> m.group(2).toInt)
       .toMap
 
+  /** Poll `read` until it returns the same value for `quietMs` (or 15 s
+    * pass) and return that value. Spark's status store and any added
+    * SparkListener are fed by the asynchronous listener bus, so a job count
+    * read right after an action can still be short: every count the gate
+    * compares is read through this settle.
+    */
+  def settle(read: () => Int, quietMs: Int = 100): Int = {
+    val pollMs = 50
+    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+    var last = read()
+    var quiet = 0
+    while (quiet < quietMs && System.nanoTime() < deadline) {
+      Thread.sleep(pollMs)
+      val cur = read()
+      if (cur == last) quiet += pollMs else { quiet = 0; last = cur }
+    }
+    last
+  }
+
   /** Loud on an empty parse: a baseline the regex cannot read would
     * otherwise vacuously pass every run — the exact failure mode the
     * whitespace fix above closed.

@@ -10,14 +10,14 @@ object Verify {
     // the driver always runs the full registry)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Env.positiveInt("SPARK_GRAFT_CPUS", 4)
     // SPARK_GRAFT_AQE=false produces the AQE-off twin dump for the
     // adaptive-invariance certificate (results must not depend on
     // runtime re-planning; default matches the driver: AQE on).
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", aqe)
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet carries INT64 TIMESTAMP(NANOS); see Tables.events.

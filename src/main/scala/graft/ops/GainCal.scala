@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 /** F3/A8/A9 — diode split, calibration height, gain calibration
   * (ref continuum.py:46-61, 111-138, 174-187).
   *
-  * The calibration spike windows are tens of rows, so A8 collects the
-  * (t, intensity) pairs of each window (after column pruning: two doubles per
-  * row) and fits on the driver — the VERDICT-approved scale route. The
-  * resulting heights are per-file scalars that A9 applies as broadcast
-  * literals in a single `withColumn`.
+  * These are the scalar references: [[calibrationHeight]] collects one
+  * spike window's (t, intensity) pairs and fits on the driver, and
+  * [[applyGain]] applies per-file height scalars as literals in a single
+  * `withColumn`. The reduction itself ([[graft.pipeline.Continuum.runAll]])
+  * fits every file's windows executor-side through [[calibrationHeightLocal]]
+  * and mirrors [[applyGain]]'s branches as one codegen'd expression.
   */
 object GainCal {
 
@@ -39,37 +40,9 @@ object GainCal {
     calibrationHeightLocal(tOn, yOn, tOff, yOff)
   }
 
-  /** Both spike windows' A8 heights in ONE collect: spike rows are tagged
-    * `(pre-window?, diode-on?)` executor-side and split locally — the same
-    * values as two [[calibrationHeight]] calls (same scan order within each
-    * subset), at 1 driver round trip instead of 4. On a cold JVM each
-    * round trip pays full scheduler+codegen latency (the r6 driver-bench
-    * tax on the single-file pipelines), so the merge matters there; the
-    * collected payload is unchanged — tens of spike rows, two doubles and
-    * two booleans each.
-    */
-  def calibrationHeights(
-      integ: DataFrame, dataStart: Long, postCal: Long): (Option[Height], Option[Height]) = {
-    val rows = integ
-      .filter((col("__pos") < dataStart || col("__pos") >= postCal) && (diodeOn || diodeOff))
-      .select((col("__pos") < dataStart).as("pre"), (col("CALSTATE") === 1).as("on"),
-        col("t"), col("intensity"))
-      .collect()
-    def part(pre: Boolean, on: Boolean): (Array[Double], Array[Double]) = {
-      val sel = rows.filter(r => r.getBoolean(0) == pre && r.getBoolean(1) == on)
-      (sel.map(_.getDouble(2)), sel.map(_.getDouble(3)))
-    }
-    val (tPreOn, yPreOn) = part(pre = true, on = true)
-    val (tPreOff, yPreOff) = part(pre = true, on = false)
-    val (tPostOn, yPostOn) = part(pre = false, on = true)
-    val (tPostOff, yPostOff) = part(pre = false, on = false)
-    (calibrationHeightLocal(tPreOn, yPreOn, tPreOff, yPreOff),
-      calibrationHeightLocal(tPostOn, yPostOn, tPostOff, yPostOff))
-  }
-
-  /** A8 core on local arrays — shared by the single-file (driver collect)
-    * and multi-file ([[graft.pipeline.Continuum.runAll]] executor-side
-    * mapGroups) paths.
+  /** A8 core on local arrays — shared by [[calibrationHeight]] (driver
+    * collect) and [[graft.pipeline.Continuum.runAll]] (executor-side
+    * mapGroups).
     */
   def calibrationHeightLocal(
       tOn: Array[Double], yOn: Array[Double],

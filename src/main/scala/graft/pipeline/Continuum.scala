@@ -10,13 +10,13 @@ import graft.ops._
 /** Entry point 2 — the continuum reduction (ref continuum.py:140-191):
   * F1 feed/pol filter → optional F6/F7 range filters → ST1 spike scan →
   * A8 calibration heights on the pre/post windows → A1 integration of the
-  * data window → A9 gain division. Returns (t, intensity) ordered by t.
+  * data window → A9 gain division. Returns (FILE_ID, t, intensity) ordered
+  * by (FILE_ID, t).
   *
-  * Plan shape at scale: the filters + A1 are one narrow map-only chain over
-  * the scan (predicate pushdown + column pruning reach parquet); ST1 collects
-  * only three flag columns; A8 collects two doubles per spike row; A9 is a
-  * broadcast-literal `withColumn`. Nothing shuffles except the final orderBy,
-  * which the caller can drop when order is not needed.
+  * There is one reduction path, [[runAll]]: a single observation is a
+  * one-file night (any frame carrying FILE_ID/ROWIDX/OBSMODE), reduced by
+  * the same job chain as N files; drop FILE_ID for the reference's
+  * (t, intensity) product.
   */
 object Continuum {
 
@@ -29,84 +29,25 @@ object Continuum {
       excludeTime: Seq[(Double, Double)] = Nil,
       strictCompat: Boolean = false)
 
-  /** Positional index within the (already filtered) frame — the reference's
-    * implicit row position (F9). Bucketed form ([[graft.ops.Positions]])
-    * on BOTH paths (r14): a constant FILE_ID would constant-fold a
-    * per-file window's partition key away and funnel every row through
-    * one WindowExec partition, and even the genuine multi-file window
-    * parallelizes only by file COUNT — the sf10 certificate measured it
-    * at 20× for 10× data on a 4-file fixture. The bucketed offsets side
-    * re-reads the checkpointed/cached upstream, a narrow extra scan.
-    */
-  private def withPos(df: DataFrame): DataFrame = Positions.withPos(df)
-
-  def run(df: DataFrame, header: Header, p: Params): DataFrame = {
-    // A3 — sweep-interleave factor from the PRE-filter table (continuum.py:24-28).
-    val channelCount = Integration.sweepInterleaveFactor(df)
-
-    // F1 — feed/pol selection (continuum.py:30-33).
-    var d = df.filter(col("IFNUM") === p.ifnum && col("PLNUM") === p.plnum)
-
-    // F6 — time ranges (continuum.py:147-148).
-    val t0 = lit(header.date)
-    d = RangeFilters.filterTimeRanges(d, t0, p.includeTime, p.excludeTime)
-
-    // F7 — frequency ranges, else synthesized axis (continuum.py:149-153).
-    val fr = HeaderRecord.frequencyRange(header, p.ifnum)
-    val freqs = ArrayOps.freqAxis(fr.high, fr.low, fr.channelCount)
-    val (_, d2) = RangeFilters.filterFrequencyRanges(d, freqs, p.includeFreq, p.excludeFreq)
-
-    // ST1 — three indices on the filtered frame (continuum.py:156).
-    // flagged is cached: the ST1 scan, both A8 height collects and the final
-    // consumer all read it. NOT unpersisted here — the returned frame is
-    // lazy and still reads `flagged`; an eager unpersist would force the
-    // final consumer to recompute the whole chain. Cache lifecycle is the
-    // CALLER's: clear with spark.catalog.clearCache() once the result is
-    // consumed (the harness does this between queries). Callers looping
-    // over MANY files should use [[runAll]] — one job chain, no per-file
-    // caches — rather than calling run() per file.
-    val flagged = withPos(d2).cache()
-    // Distributed ST1: flag rows reduce executor-side; one row reaches the
-    // driver (scanSingleFile semantics, pinned by q_st1_calscan).
-    val idx = CalibrationScan.scanSingleFileDistributed(flagged, channelCount, header.obsmode)
-    val dataStart = idx.dataStart.getOrElse(0)
-    val postCal = idx.postCalStart
-
-    // A1 over each window once, then F9 positional slicing on the result —
-    // one pass computes t/intensity for every row.
-    val integ = flagged.select(
-      col("__pos"),
-      col("CALSTATE"), col("SWPVALID"),
-      RangeFilters.relSeconds(col("DATE_OBS"), t0).as("t"),
-      ArrayOps.arraySum(col("DATA")).as("intensity"))
-
-    // A8 — heights from the pre/post calibration windows (continuum.py:161-169),
-    // both windows in one tagged collect (one driver round trip, not four).
-    val (pre, post) = GainCal.calibrationHeights(integ, dataStart, postCal)
-
-    // Data window integration (continuum.py:171) + A9 gain division.
-    val cont = integ
-      .filter(col("__pos") >= dataStart && col("__pos") < postCal)
-      .select(col("t"), col("intensity"))
-    GainCal.applyGain(cont, pre, post, p.strictCompat).orderBy(col("t"))
-  }
-
-  /** Multi-file scale path: the whole reduction for N files in ONE Spark job
-    * chain — no per-file driver orchestration ([[run]] issues ~6 driver-
-    * synchronous jobs per file, which at 100k files makes the driver loop the
-    * bottleneck; here the driver issues a constant number of jobs total).
+  /** The whole reduction for N files (N ≥ 1) in ONE Spark job chain — no
+    * per-file driver orchestration: the driver issues a constant number of
+    * jobs however many files the frame holds, and no cache is left for the
+    * caller to clear.
     *
     * Plan shape: one narrow projection computes (t, intensity) for every row
     * (column pruning keeps the wide DATA out of everything downstream of
-    * A1); per-file ST1 + A8 + the A9 branch decision run executor-side in a
-    * `groupByKey(FILE_ID).mapGroups` over the pruned five-column frame (a
-    * file's rows must fit one executor's memory — they are one observation);
-    * the resulting per-file gain parameters broadcast-join back onto the
-    * integrated frame and the division is a codegen'd `when` expression.
+    * A1); per-file ST1 runs executor-side as a streaming secondary-sort
+    * scan, A8 in a `groupByKey(FILE_ID).mapGroups` over the spike windows
+    * only, and the A9 branch decision is a CaseWhen over the tiny per-file
+    * frame; the resulting per-file gain parameters broadcast-join back onto
+    * the integrated frame and the division is a codegen'd `when` expression.
     *
-    * Semantics per file are identical to [[run]] (same scan, same fits, same
-    * truthiness/z/strictCompat branches, interpolation over the data
-    * window's min/max t), pinned by ContinuumAllSpec against [[run]].
+    * Semantics per file are the scalar references' (ST1
+    * [[graft.ops.CalibrationScan.scan]], A8
+    * [[graft.ops.GainCal.calibrationHeightLocal]], A9
+    * [[graft.ops.GainCal.applyGain]]: same truthiness/z/strictCompat
+    * branches, interpolation over the data window's min/max t), pinned by
+    * ContinuumAllSpec against a per-file composition of those references.
     */
   def runAll(df: DataFrame, header: Header, p: Params): DataFrame = {
     val spark = df.sparkSession
@@ -130,7 +71,7 @@ object Continuum {
     // channel geometry, and under ANSI an unconditional element_at would
     // crash on another IF's shorter DATA array — besides wasting the
     // arraySum on every row F1 drops anyway. Gated, the surviving values
-    // are exactly what [[run]] computes post-filter. The gate is
+    // are exactly what a post-filter A1 computes. The gate is
     // CONSTRUCTED — pickChannels sits inside the when() branch directly
     // (ADVICE r13): the earlier form cropped via an unconditional
     // withColumn and depended on CollapseProject inlining it into the
@@ -187,13 +128,13 @@ object Continuum {
     // the 15M-rows-per-file sf10 fixture. Now only the pre/post
     // calibration WINDOWS (tens of rows per file) ever reach a group
     // buffer: the ST1 indices come from the O(1)-state streaming scan
-    // ([[CalibrationScan.scanPerFileCc]], the scanPerFile shape with the
-    // per-file A3 factor as a column), broadcast back onto the integrated
+    // ([[CalibrationScan.scanPerFileCc]], with the per-file A3 factor as
+    // a column), broadcast back onto the integrated
     // frame; the spike-window filter bounds what the heights mapGroups
     // sees; and the data window reduces to a min/max/count aggregation.
     // The A9 branch decision becomes a codegen'd CaseWhen over the tiny
     // per-file frame — same op order as the mapGroups had, so
-    // ContinuumAllSpec's bit-parity against [[run]] still pins it.
+    // ContinuumAllSpec's bit-parity against the scalar references pins it.
     val idx = CalibrationScan.scanPerFileCc(
         integ.join(broadcast(cc), "FILE_ID")
           .select(col("FILE_ID"), col("__pos"), col("CALSTATE"),
@@ -285,7 +226,7 @@ object Continuum {
 
     // Broadcast the tiny per-file parameter table back onto the integrated
     // frame; the gain division is a codegen'd expression (same op order as
-    // GainCal.applyGain for bit parity with the single-file path).
+    // GainCal.applyGain for bit parity with the scalar reference).
     val h = col("__p") + (col("__q") - col("__p")) * ((col("t") - col("__t1")) / (col("__t2") - col("__t1")))
     integ.join(broadcast(params), "FILE_ID")
       .filter(col("__pos") >= col("__ds") && col("__pos") < col("__pc"))

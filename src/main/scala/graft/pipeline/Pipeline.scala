@@ -34,7 +34,7 @@ object Pipeline {
     (cp, sp)
   }
 
-  /** Validate + optional atmosphere stage, shared by [[run]] and [[runAll]]
+  /** Validate + optional atmosphere stage in front of both reductions
     * (ref atmosphere_correction.py:59-86): per-row weather → per-channel
     * transmission over the GHz axis → DATA /= transmission. The axis is the
     * header-derived MHz axis / 1000 (ref :68), over the post-crop channel
@@ -52,26 +52,13 @@ object Pipeline {
     }
   }
 
-  def run(
-      df: DataFrame,
-      header: Header,
-      ifnum: Int,
-      plnum: Int,
-      atmosphere: Boolean = false,
-      continuumParams: Continuum.Params = null,
-      spectrumParams: Spectrum.Params = null): Result = {
-    val (cp, sp) = resolveParams(ifnum, plnum, continuumParams, spectrumParams)
-    val corrected = correctedFrame(df, header, ifnum, atmosphere)
-    Result(
-      continuum = Continuum.run(corrected, header, cp),
-      spectrum = Spectrum.run(corrected, header, sp))
-  }
-
-  /** Multi-file form of [[run]]: validate and (optionally) correct are
-    * per-row maps, so they compose unchanged in front of the
-    * [[Continuum.runAll]] / [[Spectrum.runAll]] scale paths — the whole
-    * driver for N files in two job chains, no per-file driver orchestration
-    * and no caches held.
+  /** The whole driver for N files (N ≥ 1; one observation is a one-file
+    * night): validate and (optionally) correct are per-row maps, so they
+    * compose unchanged in front of [[Continuum.runAll]] /
+    * [[Spectrum.runAll]] — two job chains, no per-file driver
+    * orchestration and no caches held. The continuum chain materializes its
+    * local checkpoints when built; the spectrum chain stays lazy until
+    * consumed. Both products carry FILE_ID.
     */
   def runAll(
       df: DataFrame,

@@ -230,15 +230,15 @@ object QueryUtil {
   /** Single-file FULL observation with the [[obsMultiFileFull]] FLAT spike
     * levels (diode-on sums to 8.0, diode-off to 2.0 → pre/post heights
     * exactly (6.0, 0.0), z = 0/0 = NaN → mean branch) so the END-TO-END
-    * Continuum.run has a closed-form oracle: science intensity / 6 at
-    * t = ROWIDX.
+    * continuum reduction of this one-file night has a closed-form oracle:
+    * science intensity / 6 at t = ROWIDX.
     */
   def obsContinuumFlat(s: SparkSession, dir: String): DataFrame =
     obsContinuumFlatFrom(li(s, dir))
 
   /** 1/5-sampled [[obsContinuumFlat]] — the bounded fixture for the FULL
-    * driver composition (q_pipeline_full runs continuum AND spectrum over
-    * it; the lossless-composition proof doesn't need the whole table).
+    * driver composition (q_pipeline_full composes continuum AND spectrum
+    * over it; the lossless-composition proof doesn't need the whole table).
     */
   def obsContinuumFlatSampled(s: SparkSession, dir: String): DataFrame =
     obsContinuumFlatFrom(li(s, dir).filter(col("l_orderkey") % 5 === 0))

@@ -222,7 +222,7 @@ object RadioQueries {
         .orderBy(col("t"))),
 
     "q_a10_onoff" -> ((s, dir) =>
-      // Single aggregation pass + 2-row fold (see Spectrum.run) — not a
+      // Single aggregation pass + 2-row fold (as in Spectrum.runAll) — not a
       // filter/crossJoin pair, which would aggregate the table twice.
       // Certificate output is posexploded to relational (channel, diff)
       // rows: the driver comparator cannot row-sort array cells (r15's
@@ -438,7 +438,10 @@ object RadioQueries {
 
     // --- ST1: calibration-spike scan (scale path) ---------------------------
     "q_st1_calscan" -> ((s, dir) =>
-      CalibrationScan.scanPerFile(obsMultiFile(s, dir), channelCount = 1,
+      // Raw flag table: scan in ROWIDX order with interleave factor 1.
+      CalibrationScan.scanPerFileCc(
+          obsMultiFile(s, dir).select(col("FILE_ID"), col("ROWIDX").as("__pos"),
+            col("CALSTATE"), col("SWPVALID"), col("OBSMODE"), lit(1).as("__cc")),
           headerObsmode = "onoff")
         .orderBy(col("FILE_ID"))),
 
@@ -467,10 +470,12 @@ object RadioQueries {
     "q_pipeline_continuum" -> ((s, dir) =>
       // Flat-spike fixture (gain = intensity/6 in closed form) makes the full
       // F1→ST1→A8→A1→A9 composition hash-checkable (VERDICT r3 item 4).
-      // 1/5-sampled: the per-file path issues several driver-synchronous
-      // jobs and doesn't need a 600k-row "observation" to prove the
-      // composition — q_continuum_all is the volume/scale demonstration.
-      Continuum.run(obsContinuumFlatSampled(s, dir), obsHeader(4), Continuum.Params(ifnum = 0, plnum = 1))),
+      // One observation is a one-file night through the same runAll chain;
+      // FILE_ID dropped for the reference's (t, intensity) product.
+      // 1/5-sampled: the composition proof doesn't need a 600k-row
+      // "observation" — q_continuum_all is the volume/scale demonstration.
+      Continuum.runAll(obsContinuumFlatSampled(s, dir), obsHeader(4),
+        Continuum.Params(ifnum = 0, plnum = 1)).drop("FILE_ID")),
 
     "q_continuum_all" -> ((s, dir) =>
       // Multi-file scale path: N files reduced in ONE job chain (per-file
@@ -552,13 +557,17 @@ object RadioQueries {
       // physical columns, crop 0_3 over 4 channels), so the continuum
       // product carries the closed-form q_pipeline_continuum oracle over
       // the sampled fixture — what the query adds is proof the composed
-      // stages are lossless. Bounded input (1/5): the full driver runs BOTH
-      // reductions eagerly, and the composition proof doesn't need 600k
-      // rows.
-      Pipeline.run(obsContinuumFlatSampled(s, dir), obsHeader(4), ifnum = 0, plnum = 1).continuum),
+      // stages are lossless. The unused spectrum product stays lazy, so
+      // only the continuum chain runs. Bounded input (1/5): the
+      // composition proof doesn't need 600k rows.
+      Pipeline.runAll(obsContinuumFlatSampled(s, dir), obsHeader(4), ifnum = 0, plnum = 1)
+        .continuum.drop("FILE_ID")),
 
     "q_pipeline_spectrum" -> ((s, dir) =>
-      Spectrum.run(obsSpectrum(s, dir), obsHeader(4), Spectrum.Params(ifnum = 0, plnum = 1))),
+      // One observation as a one-file night; FILE_ID dropped for the
+      // reference's (pos, frequency, intensity) product.
+      Spectrum.runAll(obsSpectrum(s, dir), obsHeader(4), Spectrum.Params(ifnum = 0, plnum = 1))
+        .drop("FILE_ID")),
 
     "q_spectrum_all" -> ((s, dir) =>
       // Multi-file spectrum scale path: per-file ON/OFF spectra in ONE

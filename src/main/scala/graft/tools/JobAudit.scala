@@ -49,17 +49,10 @@ object JobAudit {
     // Listener events are delivered async — drain the bus by polling until
     // no new events arrive for a quiet period (ADVICE r13: a fixed sleep is
     // a race on a loaded host — late warm-run job-end events leaked into
-    // the timed report this audit exists to keep clean).
-    def drainListenerBus(): Unit = {
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      var last = (jobs.size, durs.size)
-      var quietMs = 0
-      while (quietMs < 500 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val cur = (jobs.size, durs.size)
-        if (cur == last) quietMs += 100 else { quietMs = 0; last = cur }
-      }
-    }
+    // the timed report this audit exists to keep clean). Both maps only
+    // grow, so their summed size is stable exactly when each one is.
+    def drainListenerBus(): Unit =
+      graft.JobGate.settle(() => jobs.size + durs.size, quietMs = 500)
     if (args.length > 2 && args(2) == "warm") {
       fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
       spark.catalog.clearCache()

@@ -39,6 +39,14 @@ class JobGateSpec extends SparkTestBase {
     assert(JobGate.parseJobs(pretty) == Map("q_a" -> 3, "q_b" -> 7))
   }
 
+  test("settle waits out a count that is still rising") {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val bump = new Thread(() => (1 to 5).foreach { _ => Thread.sleep(10); n.incrementAndGet() })
+    bump.start()
+    assert(JobGate.settle(() => n.get(), quietMs = 1000) == 5)
+    bump.join()
+  }
+
   test("loadBaseline is loud on a zero-entry parse") {
     val f = java.nio.file.Files.createTempFile("jobs", ".json")
     try {
@@ -53,10 +61,7 @@ class JobGateSpec extends SparkTestBase {
       body
       spark.sparkContext.clearJobGroup()
       // settle the async status listener before reading the group
-      spark.sparkContext.statusTracker.getJobIdsForGroup(name).length.max {
-        Thread.sleep(200)
-        spark.sparkContext.statusTracker.getJobIdsForGroup(name).length
-      }
+      JobGate.settle(() => spark.sparkContext.statusTracker.getJobIdsForGroup(name).length)
     }
     val df = spark.range(1000).toDF("id")
     val good = jobsOf("jg_good") {

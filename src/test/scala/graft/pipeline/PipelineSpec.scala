@@ -8,7 +8,8 @@ import graft.sources.{Corruption, VerifiedRead}
 
 /** Golden end-to-end tests over an observation-shaped fixture with a known
   * injected source and diode spikes — the reference's main.py:13-64 path
-  * (validate → continuum → spectrum) — plus the S2/S4 corruption round trip.
+  * (validate → continuum → spectrum), one observation reduced as a
+  * one-file night — plus the S2/S4 corruption round trip.
   */
 class PipelineSpec extends SparkTestBase {
   import spark.implicits._
@@ -45,8 +46,8 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("golden continuum: data window divided by the flat calibration height") {
-    val out = Continuum.run(obs, header, Continuum.Params(ifnum = 0, plnum = 1))
-      .as[(Double, Double)].collect()
+    val out = Continuum.runAll(obs, header, Continuum.Params(ifnum = 0, plnum = 1))
+      .drop("FILE_ID").as[(Double, Double)].collect()
     // ST1: data_start=16, post_cal_start=48. A8 pre: on=4*2=8, off=4*0.5=2 →
     // delta=6, sd=0 (flat). post identical → z=0/0=NaN → mean-height branch →
     // every science intensity 4*1/6.
@@ -60,8 +61,8 @@ class PipelineSpec extends SparkTestBase {
     // (rows 8-15, obsmode on) + 8 post-cal off rows (48-55, obsmode off).
     // off_start = first 'onoff:off' in that filtered set (pos 8) →
     // ON sum = 8*0.5 = 4, OFF sum = 4 → diff 0 per channel.
-    val out = Spectrum.run(obs, header, Spectrum.Params(ifnum = 0, plnum = 1))
-      .as[(Int, Double, Double)].collect()
+    val out = Spectrum.runAll(obs, header, Spectrum.Params(ifnum = 0, plnum = 1))
+      .drop("FILE_ID").as[(Int, Double, Double)].collect()
     assert(out.length == 4)
     assert(out.map(_._1).toSeq == Seq(0, 1, 2, 3))
     assert(out.map(_._2).toSeq == Seq(1395.0, 1395.0 - 80.0 / 3, 1395.0 - 2 * 80.0 / 3, 1315.0))
@@ -115,45 +116,45 @@ class PipelineSpec extends SparkTestBase {
     }
   }
 
-  test("Pipeline.run composes validate → (atmosphere) → continuum + spectrum") {
+  test("Pipeline.runAll composes validate → (atmosphere) → continuum + spectrum") {
     // atmosphere off (the reference driver default): equal to the explicit
     // stage composition, product by product.
-    val r = Pipeline.run(obs, header, ifnum = 0, plnum = 1)
+    val r = Pipeline.runAll(obs, header, ifnum = 0, plnum = 1)
     assert(r.continuum.collect().toSeq ==
-      Continuum.run(Validate.run(obs, header), header, Continuum.Params(0, 1)).collect().toSeq)
+      Continuum.runAll(Validate.run(obs, header), header, Continuum.Params(0, 1)).collect().toSeq)
     assert(r.spectrum.collect().toSeq ==
-      Spectrum.run(Validate.run(obs, header), header, Spectrum.Params(0, 1)).collect().toSeq)
+      Spectrum.runAll(Validate.run(obs, header), header, Spectrum.Params(0, 1)).collect().toSeq)
 
     // atmosphere on: equal to the explicit Atmosphere.correct composition
     // over the header-derived GHz axis.
     val withWeather = obs
       .withColumn("ELEVATIO", lit(45.0)).withColumn("TAMBIENT", lit(15.0))
       .withColumn("PRESSURE", lit(1013.0)).withColumn("HUMIDITY", lit(50.0))
-    val rAtm = Pipeline.run(withWeather, header, ifnum = 0, plnum = 1, atmosphere = true)
+    val rAtm = Pipeline.runAll(withWeather, header, ifnum = 0, plnum = 1, atmosphere = true)
     val fr = HeaderRecord.frequencyRange(header, 0)
     val axisGHz = graft.functions.ArrayOps
       .freqAxis(fr.high, fr.low, fr.channelCount).map(_ / 1000.0)
-    val expected = Continuum.run(
+    val expected = Continuum.runAll(
       graft.ops.Atmosphere.correct(Validate.run(withWeather, header), axisGHz),
       header, Continuum.Params(0, 1)).collect()
     assert(rAtm.continuum.collect().toSeq == expected.toSeq)
   }
 
-  test("Pipeline.runAll reproduces Pipeline.run file-by-file") {
+  test("Pipeline.runAll of two files equals each file reduced alone") {
     // Two copies of the single-file observation under different FILE_IDs.
     val two = obs.union(obs.withColumn("FILE_ID", lit("1")))
     val all = Pipeline.runAll(two, header, ifnum = 0, plnum = 1)
-    val single = Pipeline.run(obs, header, ifnum = 0, plnum = 1)
+    val alone = Pipeline.runAll(obs, header, ifnum = 0, plnum = 1)
 
     val perFileCont = all.continuum.as[(String, Double, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).sortBy(_._1).toSeq).toMap
-    val expectedCont = single.continuum.as[(Double, Double)].collect().toSeq
+    val expectedCont = alone.continuum.drop("FILE_ID").as[(Double, Double)].collect().toSeq
     assert(perFileCont.keySet == Set("0", "1"))
     assert(perFileCont("0") == expectedCont && perFileCont("1") == expectedCont)
 
     val perFileSpec = all.spectrum.as[(String, Int, Double, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3, r._4)).sortBy(_._1).toSeq).toMap
-    val expectedSpec = single.spectrum.as[(Int, Double, Double)].collect().toSeq
+    val expectedSpec = alone.spectrum.drop("FILE_ID").as[(Int, Double, Double)].collect().toSeq
     assert(perFileSpec("0") == expectedSpec && perFileSpec("1") == expectedSpec)
   }
 }
